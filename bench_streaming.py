@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import load1  # noqa: E402
 from kafka_streams_dexcom_spark.queries.core import ranges_df  # noqa: E402
 from kafka_streams_dexcom_spark.session import get_spark  # noqa: E402
 from kafka_streams_dexcom_spark.sources.files import load_table  # noqa: E402
@@ -90,11 +91,7 @@ def _run_counted(
 
 
 def main() -> None:
-    try:  # pre-JVM load sample: pure co-tenant signal (round 13)
-        with open("/proc/loadavg") as f:
-            load1_start = float(f.read().split()[0])
-    except (OSError, ValueError, IndexError):
-        load1_start = None
+    load1_start = load1()  # pre-JVM load sample: pure co-tenant signal
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
@@ -774,15 +771,6 @@ def main() -> None:
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
-
-    def load1():
-        # co-tenant legibility, mirroring bench.py (round 13):
-        # additions-only — existing keys untouched
-        try:
-            with open("/proc/loadavg") as f:
-                return float(f.read().split()[0])
-        except (OSError, ValueError, IndexError):
-            return None
 
     print(
         json.dumps(

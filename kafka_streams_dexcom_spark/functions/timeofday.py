@@ -24,6 +24,9 @@ def time_of_day(ts: Column | str) -> Column:
 
 def time_of_day_from_iso_string(s: Column | str) -> Column:
     """'HH:mm:ss' from an ISO-8601 local string like 2020-11-02T02:00:00
-    (string-split path, mirroring EgvTransformer.java:41)."""
+    (string-split path, mirroring EgvTransformer.java:41). Fractional
+    seconds and a zone suffix (``.406600``, ``Z``, ``+01:00``) are cut
+    off: kept, they sort ``05:59:59.4`` after a range ending ``05:59:59``
+    and the reading matches no range."""
     c = F.col(s) if isinstance(s, str) else s
-    return F.split(c, "T").getItem(1)
+    return F.substring(F.split(c, "T").getItem(1), 1, 8)

@@ -8,14 +8,18 @@ under batch and Structured Streaming here).
 Scale notes (100 TB):
 - filter/project/categorize are narrow (no shuffle); the predicates are
   Catalyst expressions so they push into the parquet/Kafka scan.
-- the interval JOIN variants broadcast the (tiny) ranges dimension — a
-  BroadcastNestedLoopJoin, the vectorized analog of the reference's
-  per-record state-store scan (EgvTransformer.java:51-81). The join
-  itself moves no fact rows, but the first-match election afterwards IS
-  one hash shuffle + sort of the joined stream on __event_pk (the
-  row_number window) — at 100 TB prefer interval_lookup_categorize_scan,
-  the genuinely zero-shuffle path (ranges inlined, first match picked
-  scan-side), whenever the dimension is driver-known.
+- the interval lookup runs scan-side wherever the ranges dimension fits
+  on the driver (interval_lookup_categorize_scan: ranges inlined as a
+  literal, first match picked per record inside the projection — no
+  join, no shuffle, one output per input). The batch flagship query and
+  the P5 streaming topology (streaming.jobs.ktable_lookup_topology,
+  which collects the reloaded dimension each micro-batch) both use it.
+- the interval JOIN variants are for dimensions too big to inline:
+  interval_join_categorize broadcasts the ranges into a
+  BroadcastNestedLoopJoin, whose first-match election IS one hash
+  shuffle + sort of the joined stream on __event_pk (the row_number
+  window); interval_join_bucketized turns the lookup into a
+  shuffle-partitionable equi-join.
 - latest_per_key / dedup shuffle once on the key — unavoidable (it is the
   groupBy key) — and AQE handles skew. For repeated use, bucket the table
   by the key to amortize the shuffle across queries.
@@ -27,8 +31,12 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_streams_dexcom_spark.functions.json import json_int_or_zero
+from kafka_streams_dexcom_spark.schemas import RANGE_SCHEMA
+
+_RANGES_TYPE = T.ArrayType(RANGE_SCHEMA)
 
 
 def filter_at_least(df: DataFrame, value_col: str, threshold: float) -> DataFrame:
@@ -167,41 +175,34 @@ def interval_lookup_categorize_scan(
     """Scan-side variant of :func:`interval_join_categorize` for a small,
     driver-known ranges dimension: the ranges are inlined as an
     array<struct> literal and the first match is found with
-    sort_array(filter(...))[0] — a pure narrow projection.
+    array_min(filter(...)), once per record — a pure narrow projection
+    that emits exactly one row per input row.
 
     Zero shuffle, zero join: at 100 TB the fact side streams through the
     scan untouched. This is exactly the reference's execution strategy
     (per-record scan of a tiny in-memory store, EgvTransformer.java:51-81)
-    vectorized — and struct sort order starts at range_id, giving the
-    deterministic lowest-range_id first-match (§2.6 #6). Use the join
+    vectorized — and struct order starts at range_id, so the minimum
+    match is the deterministic lowest-range_id first-match (§2.6 #6).
+    ``ranges_rows`` are (range_id, start_time, end_time, lower_bound,
+    upper_bound) tuples; an empty dimension matches nothing. Use the join
     variant when the dimension is too big to inline/broadcast.
     """
     ranges_lit = F.array(
-        *[
-            F.struct(
-                F.lit(rid).cast("int").alias("range_id"),
-                F.lit(st).alias("start_time"),
-                F.lit(et).alias("end_time"),
-                F.lit(lo).cast("int").alias("lower_bound"),
-                F.lit(hi).cast("int").alias("upper_bound"),
-            )
-            for rid, st, et, lo, hi in ranges_rows
-        ]
-    )
-    e = events.withColumn("__tod", tod_col).withColumn("__ranges", ranges_lit)
-    first = F.get(
-        F.expr(
-            "sort_array(filter(__ranges, "
-            "r -> __tod >= r.start_time AND __tod <= r.end_time))"
-        ),
-        0,
+        *[F.struct(*[F.lit(v) for v in r]) for r in ranges_rows]
+    ).cast(_RANGES_TYPE)  # typed, so an empty dimension still resolves
+    tod = F.col("__tod")
+    first = F.array_min(
+        F.filter(
+            ranges_lit,
+            lambda r: (tod >= r.start_time) & (tod <= r.end_time),
+        )
     )
     return (
-        e.withColumn("range_id", first.getField("range_id"))
-        .withColumn("start_time", first.getField("start_time"))
-        .withColumn("end_time", first.getField("end_time"))
-        .withColumn("lower_bound", first.getField("lower_bound"))
-        .withColumn("upper_bound", first.getField("upper_bound"))
+        events.withColumn("__tod", tod_col)
+        .withColumn("__match", first)
+        .withColumns(
+            {f: F.col("__match").getField(f) for f in RANGE_SCHEMA.names}
+        )
         .withColumn(
             "in_range",
             in_range_or_null(
@@ -210,7 +211,7 @@ def interval_lookup_categorize_scan(
                 F.col("upper_bound"),
             ),
         )
-        .drop("__tod", "__ranges")
+        .drop("__tod", "__match")
     )
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from kafka_streams_dexcom_spark.operators.dedup import HASH60_TPL
 from kafka_streams_dexcom_spark.functions.rounding import trunc6
 from kafka_streams_dexcom_spark.sources.files import fan_out_small
+from kafka_streams_dexcom_spark.sources.local import local_frame
 
 # Marker tokens per language for the n-gram/stopword heuristic. Tiny on
 # purpose — a broadcast dimension, exactly like the reference's ranges
@@ -58,7 +59,7 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def lang_markers_df(spark: SparkSession) -> DataFrame:
     rows = [(lang, tok) for lang, toks in LANG_MARKERS.items() for tok in toks]
-    return spark.createDataFrame(rows, "lang_code string, marker string")
+    return local_frame(spark, rows, "lang_code string, marker string")
 
 
 def language_id(df: DataFrame, spark: SparkSession, text_col: str = "text") -> DataFrame:
@@ -820,8 +821,8 @@ def stratified_sample(df: DataFrame, spark: SparkSession) -> DataFrame:
     (not rand()) so the sample is reproducible run-to-run, engine-to-
     engine, and stable under repartitioning; the rates table broadcasts.
     """
-    rates = spark.createDataFrame(
-        list(SAMPLING_RATES_BP.items()), "lang string, rate_bp int"
+    rates = local_frame(
+        spark, list(SAMPLING_RATES_BP.items()), "lang string, rate_bp int"
     )
     bucket = F.expr(
         f"pmod({HASH60_TPL.format(x='CAST(doc_id AS STRING)')}, 10000)"

@@ -19,6 +19,7 @@ from kafka_streams_dexcom_spark.functions.timeofday import time_of_day
 from kafka_streams_dexcom_spark.operators import core as ops
 from kafka_streams_dexcom_spark.schemas import GOLDEN_RANGES, RANGE_SCHEMA
 from kafka_streams_dexcom_spark.sources.files import load_table
+from kafka_streams_dexcom_spark.sources.local import local_frame
 
 # Threshold notes: the reference filters glucose >= 200
 # (StreamsFilterEgvs.java:30); events.value spans 0..490 so the same
@@ -36,7 +37,9 @@ RANGES_SQL_CTE = (
 
 
 def ranges_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(GOLDEN_RANGES, RANGE_SCHEMA)
+    """The golden ranges as a LocalRelation: P5 rebuilds and collects
+    this per micro-batch, which starts no Spark job."""
+    return local_frame(spark, GOLDEN_RANGES, RANGE_SCHEMA)
 
 
 # --- queries ---------------------------------------------------------------

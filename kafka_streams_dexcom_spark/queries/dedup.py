@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from kafka_streams_dexcom_spark.functions.hashing import MERSENNE_P, PERM_COEFFS
 from kafka_streams_dexcom_spark.operators import dedup as dd
 from kafka_streams_dexcom_spark.sources.files import load_table
+from kafka_streams_dexcom_spark.sources.local import local_frame
 
 JACCARD_THRESHOLD = 0.2
 NGRAM_THRESHOLD = 0.3
@@ -2441,8 +2442,8 @@ def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         (t, prow[f"c{i}"], drow[f"c{i}"])
         for i, t in enumerate(CURVE_THRESHOLDS)
     ]
-    return spark.createDataFrame(
-        rows, "threshold double, n_pairs long, n_docs long"
+    return local_frame(
+        spark, rows, "threshold double, n_pairs long, n_docs long"
     )
 
 

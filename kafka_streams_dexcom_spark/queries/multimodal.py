@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.operators import multimodal as mm
 from kafka_streams_dexcom_spark.sources.files import load_table
+from kafka_streams_dexcom_spark.sources.local import local_frame
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,8 +518,9 @@ def q_phash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         single_task_edges=len(names) * CC_SINGLE_TASK_EDGES,
     )
     mods = F.broadcast(
-        docs.sparkSession.createDataFrame(
-            [(i, n) for i, n in enumerate(names)],
+        local_frame(
+            docs.sparkSession,
+            list(enumerate(names)),
             "leg int, modality string",
         )
     )

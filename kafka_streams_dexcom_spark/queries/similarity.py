@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.operators import similarity as sim
 from kafka_streams_dexcom_spark.sources.files import load_table
+from kafka_streams_dexcom_spark.sources.local import local_frame
 
 QUERY_IDS = (0, 1, 2, 3, 4)
 TOP_K = 10
@@ -303,9 +304,7 @@ def q_ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("ann_vec_id"),
         )
         ann = part if ann is None else ann.unionByName(part)
-    names = spark.createDataFrame(
-        [(m,) for m in methods], "method string"
-    )
+    names = local_frame(spark, [(m,) for m in methods], "method string")
     gt = brute.crossJoin(F.broadcast(names))
     denom = float(len(QUERY_IDS) * TOP_K)
     return (
@@ -928,9 +927,7 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = ann.filter(F.col("dim") == 64).select(
         "query_id", F.col("m_vec_id").alias("vec_id")
     )
-    dims = spark.createDataFrame(
-        [(d,) for d in MATRYOSHKA_DIMS], "dim int"
-    )
+    dims = local_frame(spark, [(d,) for d in MATRYOSHKA_DIMS], "dim int")
     gt = truth.crossJoin(F.broadcast(dims))
     denom = float(len(QUERY_IDS) * TOP_K)
     return (

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.operators import text as tx
 from kafka_streams_dexcom_spark.sources.files import load_table
+from kafka_streams_dexcom_spark.sources.local import local_frame
 
 from kafka_streams_dexcom_spark.functions.hashing import hash60_sql
 
@@ -125,7 +126,7 @@ def q_bm25_freetext(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrows = [
         (qid, t) for qid, terms in BM25_FREETEXT_QUERIES for t in terms
     ]
-    qdf = spark.createDataFrame(qrows, "query_id long, term string")
+    qdf = local_frame(spark, qrows, "query_id long, term string")
     return tx.bm25_freetext(
         load_table(spark, sf_dir, "documents"),
         qdf,
@@ -161,7 +162,7 @@ def q_bm25_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrows = [
         (qid, t) for qid, terms in BM25_FREETEXT_QUERIES for t in terms
     ]
-    qdf = spark.createDataFrame(qrows, "query_id long, term string")
+    qdf = local_frame(spark, qrows, "query_id long, term string")
     return tx.bm25_rerank_proximity(
         load_table(spark, sf_dir, "documents"),
         qdf,

@@ -5,8 +5,9 @@ Dexcom API by time range, then produces JSON records to Kafka
 (reference: src/main/java/com/github/robertzych/kafka/ProducerDexcom.java:91-141).
 
 Spark shape: ingestion is inherently driver-side (one small HTTP payload per
-time window); the result lands in a DataFrame via ``spark.createDataFrame``
-with the declared envelope schema and is exploded into per-EGV rows. At real
+time window); the payloads land in a DataFrame via ``local_frame`` (rows
+held in the plan, no Spark job), are parsed with the declared envelope
+schema and exploded into per-EGV rows. At real
 scale you shard time ranges across executors with ``mapInPandas`` over a
 DataFrame of (start, end) windows — provided here as ``fetch_windows``.
 
@@ -24,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.schemas import EGV_ENVELOPE_SCHEMA
+from kafka_streams_dexcom_spark.sources.local import local_frame
 
 DEFAULT_BASE_URL = "https://api.dexcom.com"
 EGVS_PATH = "/v2/users/self/egvs"
@@ -69,8 +71,8 @@ def envelope_to_df(spark: SparkSession, payloads: list[dict]) -> DataFrame:
     Explodes the nested egvs array-of-struct (the reference iterates the
     list and produces one Kafka record per EGV, ProducerDexcom.java:37-60).
     """
-    env = spark.createDataFrame(
-        [json.dumps(p) for p in payloads], "string"
+    env = local_frame(
+        spark, [(json.dumps(p),) for p in payloads], "value string"
     ).select(F.from_json(F.col("value"), EGV_ENVELOPE_SCHEMA).alias("env"))
     return env.select(
         F.col("env.unit").alias("unit"),

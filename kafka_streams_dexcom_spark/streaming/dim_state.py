@@ -2,7 +2,9 @@
 a changelog stream inside engine state, not reloaded per micro-batch.
 
 The per-batch-reload variant (jobs.ktable_lookup_topology) models the
-dimension as an external snapshot. This module is the other half of the
+dimension as an external snapshot: each micro-batch reloads it, collects
+its rows to the driver and categorizes scan-side
+(operators.core.interval_lookup_categorize_scan). This module is the other half of the
 reference's design (CategorizeWithKTableLookup.java:60-62): the ranges
 topic IS a changelog, the operator consumes it as a second stream, and
 each event reads whatever the store holds when its batch runs

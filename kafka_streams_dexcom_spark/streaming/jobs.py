@@ -16,6 +16,7 @@ from kafka_streams_dexcom_spark.functions.timeofday import (
     time_of_day_from_iso_string,
 )
 from kafka_streams_dexcom_spark.operators import core as ops
+from kafka_streams_dexcom_spark.schemas import RANGE_SCHEMA
 
 
 def filter_high_topology(stream: DataFrame) -> DataFrame:
@@ -49,26 +50,27 @@ def ktable_lookup_topology(
 ) -> Callable[[DataFrame, int], DataFrame]:
     """P5 (CategorizeWithKTableLookup.java:47-79): per micro-batch, reload
     the ranges dimension (latest-per-key = the KTable's current state),
-    broadcast it, interval-join + categorize. The reload-per-batch is the
-    Spark analog of the reference reading whatever state the store holds
-    when each record arrives (EgvTransformer.java:51) — a snapshot per
-    batch, documented in SURVEY.md §7 hard-parts #3."""
+    collect its rows to the driver and categorize scan-side
+    (ops.interval_lookup_categorize_scan: first match picked per record
+    inside the projection). The reload-per-batch is the Spark analog of
+    the reference reading whatever state the store holds when each record
+    arrives (EgvTransformer.java:51) — a snapshot per batch, documented in
+    SURVEY.md §7 hard-parts #3.
+
+    The scan emits exactly one output per input record, as the reference
+    does, with no join, no shuffle and no per-record id. The dimension
+    must fit on the driver, which broadcasting it already required. A
+    loader returning a LocalRelation (queries.core.ranges_df) collects
+    without a Spark job; a table-backed loader pays one small collect
+    job per batch, the one its broadcast used to pay."""
 
     def run_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
-        ranges = ranges_loader()
-        # Per-RECORD pk: the reference emits one output per input record
-        # (EgvTransformer.java:51), so the first-match window must never
-        # collapse distinct records. systemTime is NOT unique (second
-        # resolution collides across users at bench volume); a synthetic
-        # id preserves every record.
-        egvs = batch_df.withColumn(
-            "__event_pk", F.monotonically_increasing_id()
-        )
-        return ops.interval_join_categorize(
-            egvs,
+        ranges = ranges_loader().select(*RANGE_SCHEMA.names).collect()
+        return ops.interval_lookup_categorize_scan(
+            batch_df,
             ranges,
             time_of_day_from_iso_string("systemTime"),
             "value",
-        ).drop("__event_pk")  # internal, and id values are run-dependent
+        )
 
     return run_batch

@@ -54,6 +54,41 @@ def test_ktable_lookup_golden(spark):
     assert rid == {75: 1, 100: 2, 265: 2}
 
 
+def test_iso_time_of_day_keeps_boundary_seconds_in_range(spark):
+    # Sub-second and zone-suffixed stamps at every range boundary must
+    # resolve to the range holding their HH:mm:ss: "05:59:59.5" sorting
+    # after the "05:59:59" end once left every last-second reading
+    # unmatched (in_range null).
+    from kafka_streams_dexcom_spark.streaming import jobs
+
+    boundaries = {
+        "00:00:00": 1, "05:59:59": 1, "06:00:00": 2,
+        "21:59:59": 2, "22:00:00": 3, "23:59:59": 3,
+    }
+    rows = [
+        (f"{hms}{suffix}", rid)
+        for hms, rid in boundaries.items()
+        for suffix in (".5", ".406600", "Z", ".5Z", "+01:00")
+    ]
+    egvs = spark.createDataFrame(
+        [("k", f"2024-01-01T{stamp}", 100) for stamp, _ in rows],
+        "key string, systemTime string, value int",
+    )
+    tods = {
+        r.systemTime: r.tod
+        for r in egvs.select(
+            "systemTime",
+            time_of_day_from_iso_string("systemTime").alias("tod"),
+        ).collect()
+    }
+    assert {s[11:]: t for s, t in tods.items()} == {
+        stamp: stamp[:8] for stamp, _ in rows
+    }
+    out = jobs.ktable_lookup_topology(lambda: ranges_df(spark))(egvs, 0)
+    got = {r.systemTime[11:]: (r.range_id, r.in_range) for r in out.collect()}
+    assert got == {stamp: (rid, "true") for stamp, rid in rows}
+
+
 def test_interval_join_no_match_gives_nulls(spark):
     # SURVEY.md §2.6 #4: unmatched → null enrichment (left-join policy).
     egvs = spark.createDataFrame(
@@ -65,6 +100,20 @@ def test_interval_join_no_match_gives_nulls(spark):
     ).collect()
     assert len(out) == 1
     assert out[0].range_id is None and out[0].in_range is None
+
+
+def test_ktable_lookup_over_empty_dimension_gives_nulls(spark):
+    # a KTable with no ranges yet: every record still comes out, unmatched
+    from kafka_streams_dexcom_spark.streaming import jobs
+
+    egvs = spark.createDataFrame(
+        [("k", "2020-11-02T10:00:00", 100), ("k", "2020-11-02T10:00:00", 100)],
+        "key string, systemTime string, value int",
+    )
+    empty = lambda: ranges_df(spark).limit(0)  # noqa: E731
+    out = jobs.ktable_lookup_topology(empty)(egvs, 0).collect()
+    assert len(out) == 2
+    assert all(r.range_id is None and r.in_range is None for r in out)
 
 
 def test_interval_join_first_match_tiebreak(spark):

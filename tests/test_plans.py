@@ -65,6 +65,126 @@ def test_interval_join_variant_is_broadcast_nlj(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+
+
+def test_driver_rows_plan_as_local_relation(spark):
+    # rows held in the plan: collecting or broadcasting them runs no job
+    from kafka_streams_dexcom_spark.queries.core import ranges_df
+    from kafka_streams_dexcom_spark.sources.local import local_frame
+
+    rows = [(1, "a", 0.5), (2, None, None)]
+    frame = local_frame(spark, rows, "id long, s string, x double")
+    for df in (ranges_df(spark), frame):
+        plan = _optimized_plan(df)
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert [tuple(r) for r in frame.collect()] == rows
+    assert frame.schema.simpleString() == "struct<id:bigint,s:string,x:double>"
+    # the control: a parallelized list is the LogicalRDD the helper avoids
+    plan = _optimized_plan(spark.createDataFrame(rows, frame.schema))
+    assert "LogicalRDD" in plan, plan
+
+
+def _p5_batch(spark):
+    from kafka_streams_dexcom_spark.queries.core import ranges_df
+    from kafka_streams_dexcom_spark.sources.local import local_frame
+    from kafka_streams_dexcom_spark.streaming import jobs
+
+    egvs = local_frame(
+        spark,
+        [("k", "2024-01-01T05:59:59.406600", 100)],
+        "key string, systemTime string, value int",
+    )
+    return jobs.ktable_lookup_topology(lambda: ranges_df(spark))(egvs, 0)
+
+
+def test_p5_batch_plan_has_no_exchange_join_or_window(spark):
+    plan = explain_str(_p5_batch(spark))
+    for node in ("Exchange", "Join", "Window"):
+        assert node not in plan, plan
+
+
+def _jobs_in_group(spark, group: str, action) -> list[int]:
+    """Job ids ``action`` starts, read from the status store. Job events
+    reach the store through the asynchronous listener bus in order, so
+    once a later control job is visible, every job ``action`` started is
+    too."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup(group, group)
+        action()
+        sc.setJobGroup(f"{group}-control", f"{group}-control")
+        spark.range(1).rdd.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-control"):
+        assert time.monotonic() < deadline, "control job never reported"
+        time.sleep(0.05)
+    return tracker.getJobIdsForGroup(group)
+
+
+def test_ranges_collect_and_p5_build_start_no_job(spark):
+    from kafka_streams_dexcom_spark.queries.core import ranges_df
+    from kafka_streams_dexcom_spark.schemas import GOLDEN_RANGES, RANGE_SCHEMA
+
+    got = []
+    assert _jobs_in_group(
+        spark, "ranges-collect", lambda: got.extend(ranges_df(spark).collect())
+    ) == []
+    assert [tuple(r) for r in got] == GOLDEN_RANGES
+    # building a P5 micro-batch reloads and collects the dimension
+    assert _jobs_in_group(spark, "p5-build", lambda: _p5_batch(spark)) == []
+    # the counter is live: the parallelized list it replaced runs a job
+    legacy = spark.createDataFrame(GOLDEN_RANGES, RANGE_SCHEMA)
+    assert _jobs_in_group(spark, "rdd-collect", legacy.collect)
+
+
+def _assert_group_limit_pinned(spark, build, node: str, k: int) -> None:
+    """``node`` is InsertWindowGroupLimit's output for a rank filter
+    ``rank <= k``. It fires at the default threshold and vanishes one
+    below ``k``, so the test fails if the threshold's semantics move."""
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    assert int(spark.conf.get(key)) >= k
+    assert node in explain_str(build()), explain_str(build())
+    spark.conf.set(key, str(k - 1))
+    try:
+        assert node not in explain_str(build())
+    finally:
+        spark.conf.unset(key)
+
+
+def test_zipf_slope_global_top_k_at_threshold_is_limited(spark, sf_dir):
+    # k = 1000 is exactly the default threshold (inclusive). With no
+    # partition spec the rule rewrites the rank filter as a Limit, which
+    # plans as TakeOrderedAndProject instead of a WindowGroupLimit node.
+    from kafka_streams_dexcom_spark.queries.text import q_zipf_slope
+
+    _assert_group_limit_pinned(
+        spark, lambda: q_zipf_slope(spark, sf_dir),
+        "TakeOrderedAndProject", 1000,
+    )
+
+
+def test_partitioned_top_k_has_window_group_limit(spark, sf_dir):
+    # sim_search_lsh's per-query top-k: partial heads pruned below the
+    # exchange by WindowGroupLimit
+    from kafka_streams_dexcom_spark.queries.similarity import (
+        TOP_K,
+        q_sim_search_lsh,
+    )
+
+    _assert_group_limit_pinned(
+        spark, lambda: q_sim_search_lsh(spark, sf_dir),
+        "WindowGroupLimit", TOP_K,
+    )
+
+
 def test_top_customers_broadcasts_dimension(spark, sf_dir):
     df = q_top_customers(spark, sf_dir)
     assert plan_has(df, "BroadcastHashJoin"), explain_str(df)

@@ -70,6 +70,30 @@ def test_interval_join_batch_stream_equivalent(spark):
     assert sorted(batch_rows, key=key) == sorted(stream_rows, key=key)
 
 
+def test_ktable_lookup_emits_one_row_per_record(spark):
+    """The reference emits one output per input record
+    (EgvTransformer.java:51): duplicate (key, systemTime) records,
+    same-second records of different users and records on every range
+    boundary all come out once, in batch and micro-batched alike."""
+    stamps = [
+        "00:00:00", "05:59:59", "05:59:59.5", "06:00:00", "06:00:00.5",
+        "21:59:59", "21:59:59.5", "22:00:00", "23:59:59", "23:59:59.5Z",
+    ]
+    rows = [(user, f"2020-11-02T{t}", 100) for t in stamps for user in ("a", "b")]
+    rows += [("a", "2020-11-02T12:00:00", 100)] * 3  # exact duplicates
+    egvs = spark.createDataFrame(rows, "key string, systemTime string, value int")
+    run_batch = jobs.ktable_lookup_topology(lambda: ranges_df(spark))
+    batch_rows = run_batch(egvs, 0).collect()
+    stream_rows = run_stream_foreach_batch(spark, egvs, run_batch)
+    key = lambda r: tuple(str(v) for v in r)  # noqa: E731
+    assert len(batch_rows) == len(stream_rows) == len(rows)
+    assert sorted(batch_rows, key=key) == sorted(stream_rows, key=key)
+    assert sorted((r.key, r.systemTime, r.value) for r in batch_rows) == sorted(
+        rows
+    )
+    assert all(r.in_range == "true" for r in batch_rows)  # every second is covered
+
+
 def test_fan_out_single_pass_two_sinks(spark):
     """P4: one source batch feeds both output 'topics'."""
     outs: dict[str, list] = {"integer-values": [], "are-values-in-range": []}
